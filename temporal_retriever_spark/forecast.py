@@ -292,7 +292,6 @@ def forecast_with_covariate(
     value_col: str = "y",
     cov_col: str = "cov",
     materialize_covariate: bool = False,
-    materialize_history: bool = False,
     include_bounds: bool = True,
     quantiles: tuple[float, float] = (0.05, 0.95),
 ) -> DataFrame:
@@ -321,15 +320,7 @@ def forecast_with_covariate(
     ``materialize_covariate=True`` localCheckpoints the covariate frame
     first: it is referenced twice in the plan (history join + future
     grid join), and when it is itself a forecast sub-plan, truncating
-    the lineage roughly halves execution. ``materialize_history``
-    (default False) does the same for the joined history frame, which
-    the fit/residual/seasonal/quantile stages reference four times.
-    Measured at sf0.1 the eager checkpoint job costs MORE than the
-    recomputation it avoids (~1s vs ~0.2s: the shuffled history
-    exchanges are already reused by AQE), so it is off by default;
-    turn it on only when the history sub-plan is expensive relative to
-    its bucketed output (e.g. a wide raw scan feeding few buckets)
-    and executor memory holds the checkpoint comfortably.
+    the lineage roughly halves execution.
     """
     series_cols = list(series_cols)
     if materialize_covariate:
@@ -339,8 +330,6 @@ def forecast_with_covariate(
         on=[*series_cols, ts_col],
         how="inner",
     )
-    if materialize_history:
-        joined = joined.localCheckpoint(eager=True)
     t = _time_index(F.col(ts_col))
     hist = joined.withColumn("_t", t)
 
@@ -808,8 +797,6 @@ def forecast_covariate_changepoint(
     ts_col: str = "ds",
     value_col: str = "y",
     cov_col: str = "cov",
-    materialize_covariate: bool = False,
-    materialize_history: bool = False,
     include_bounds: bool = True,
     quantiles: tuple[float, float] = (0.05, 0.95),
 ) -> DataFrame:
@@ -821,15 +808,11 @@ def forecast_covariate_changepoint(
     series, ds, yhat[, yhat_lower, yhat_upper], coef.
     """
     series_cols = list(series_cols)
-    if materialize_covariate:
-        covariate_pred = covariate_pred.localCheckpoint(eager=True)
     joined = target.join(
         covariate_pred.select(*series_cols, ts_col, cov_col),
         on=[*series_cols, ts_col],
         how="inner",
     )
-    if materialize_history:
-        joined = joined.localCheckpoint(eager=True)
     params = fit_changepoint_trend(
         joined,
         n_changepoints=n_changepoints,

@@ -8,15 +8,12 @@ paths yield None.
 Spark-first: each observation rides as a raw JSON string row;
 extraction is ``get_json_object`` (JVM, codegen) with the dot-path
 translated to a JSONPath — the exact nullable semantics of pydash, no
-Python per row. For file-scale corpora use ``spark.read.json`` and
-``F.col`` on the inferred struct instead; both paths share
-``dot_path_expr``.
+Python per row.
 """
 
 from __future__ import annotations
 
 import json
-from collections.abc import Iterable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -72,18 +69,3 @@ def extract_series(
         .filter(F.col("ds").isNotNull() | F.col("y").isNotNull())
     )
 
-
-def read_documents_json(
-    spark: SparkSession, path: str, *, name_field: str | None = "collectionName"
-) -> DataFrame:
-    """File-scale variant: newline-delimited document JSON via
-    ``spark.read.json`` (distributed scan, schema inference).
-
-    When ``name_field`` names an existing column it is surfaced as
-    ``series_id`` so downstream ops see the canonical key; pass None to
-    keep the inferred schema untouched.
-    """
-    df = spark.read.json(path)
-    if name_field and name_field in df.columns:
-        df = df.withColumn("series_id", F.col(name_field))
-    return df

@@ -19,23 +19,29 @@ Documented divergences implemented as *intent* (SURVEY §3.1/§3.2):
   (forecast.py) — Prophet isn't installed here; with prophet present
   ``backend="prophet"`` restores library parity.
 
-Each correlation is independent; at scale the engine runs them as ONE
-Spark plan per stage over the union of series (series_id keyed), not a
-Python loop per correlation — the loop here only assembles per-
-correlation response dicts from already-distributed computations.
+The three routes run the reference's stages (parse, bucket, forecast
+the covariate, coalesce its actuals, forecast the target) through one
+request plan (``_request_plan``) and one forecast fold per (grain,
+changepoint scale) (``_fold``): each stage is ONE Spark plan over the
+union of series (series_id keyed), not a Python loop per correlation.
+Each route only assembles its response dicts from the collected rows.
 """
 
 from __future__ import annotations
 
+import datetime as _dt
+import math
+from collections.abc import Callable, Iterator
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 from functools import partial
 from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from temporal_retriever_spark.aggregate import bucket_aggregate, date_bounds
-from temporal_retriever_spark.align import coalesce_actuals, split_forecasts
+from temporal_retriever_spark.aggregate import bucket_aggregate, normalize_aggregation
+from temporal_retriever_spark.align import coalesce_actuals
 from temporal_retriever_spark.api.models import AnalyzeRequest, Correlation
 from temporal_retriever_spark.diagnostics import (
     acf_pacf,
@@ -49,26 +55,8 @@ from temporal_retriever_spark.forecast import (
     forecast_linear_seasonal,
     forecast_with_covariate,
 )
+from temporal_retriever_spark.grains import normalize_grain
 from temporal_retriever_spark.ingest import documents_df, extract_series
-
-import os as _os
-import sys as _sys
-import time as _time
-
-
-def _profiled(fn, label):
-    """Wrap a stage chain with wall-clock logging when TRS_PROFILE is set."""
-    if not _os.environ.get("TRS_PROFILE"):
-        return fn
-
-    def wrapper(*a, **kw):
-        t0 = _time.time()
-        out = fn(*a, **kw)
-        print(f"# chain {label}: {_time.time() - t0:.2f}s", file=_sys.stderr)
-        return out
-
-    return wrapper
-
 
 #: hinge count for the piecewise trend when ChangePointPriorScale is
 #: provided (Prophet defaults to 25 over much longer histories; 10 keeps
@@ -113,10 +101,6 @@ def _size_gated(prepared: DataFrame, n_input_rows: int) -> DataFrame:
     return prepared.cache()
 
 
-def _records(df: DataFrame) -> list[dict]:
-    return [r.asDict(recursive=True) for r in df.collect()]
-
-
 _RENAMES = {
     "ds": "date",
     "yhat": "prediction",
@@ -125,45 +109,130 @@ _RENAMES = {
 }
 
 
-def _rename_predictions(df: DataFrame) -> DataFrame:
-    cols = [
-        F.col(c).alias(_RENAMES.get(c, c)) for c in df.columns if c != "series_id"
-    ]
-    return df.select(*cols)
+def _leg(corr: Correlation, *, cov: bool) -> tuple[str, str, str, str]:
+    """(dataset, index, grain, aggregation) of one leg of a correlation."""
+    ds_name, idx = (
+        (corr.from_data, corr.from_index) if cov else (corr.to_data, corr.to_index)
+    )
+    return (
+        ds_name,
+        idx,
+        normalize_grain(corr.grain),
+        normalize_aggregation(corr.aggregation),
+    )
 
 
-def analyze(
-    spark: SparkSession, request: AnalyzeRequest, *, lags: int | None = None
-) -> dict:
-    """``/analyze`` semantics: covariate-driven forecast per correlation.
+class _RequestPlan:
+    """The prepared legs of one request, their stats, and the frames a
+    fold builds from them.
 
-    Returns {"correlations": {id: {diagnostics, autocorrelations,
-    partialAutocorrelations, regressorCoefficients, predictions}}} —
-    the reference's response shape (app.py:211-248, responses.py).
+    ``prepared`` holds every distinct (dataset, index, grain, agg) leg
+    once, keyed by its leg series id, so e.g. three correlations
+    against the same target prepare it once. ``stats`` comes from ONE
+    action over it: per leg the date bounds, the observation count and
+    the min/max/sum/sum-of-squares the A4 caps need.
     """
-    from temporal_retriever_spark.aggregate import normalize_aggregation
-    from temporal_retriever_spark.grains import normalize_grain
 
+    def __init__(self, spark: SparkSession, request: AnalyzeRequest, *, covariate: bool):
+        self.spark = spark
+        self.covariate = covariate
+        self.leg_sids: dict[tuple, str] = {}
+        for corr in request.correlations:
+            for cov in (True, False) if covariate else (False,):
+                key = _leg(corr, cov=cov)
+                self.leg_sids.setdefault(key, "{}.{}|{}|{}".format(*key))
+        self.prepared: DataFrame | None = None
+        self.stats: dict[str, Any] = {}
+        self.checkpoints: list[DataFrame] = []
+
+    def leg_sid(self, corr: Correlation, *, cov: bool) -> str:
+        return self.leg_sids[_leg(corr, cov=cov)]
+
+    def leg_stats(self, corr: Correlation, *, cov: bool):
+        return self.stats[self.leg_sid(corr, cov=cov)]
+
+    def units(self, corr: Correlation, *, cov: bool) -> int:
+        """Forecast horizon: unitsToForecast, else the leg's bucket count (A5)."""
+        return corr.prediction_horizon or self.leg_stats(corr, cov=cov)["n"]
+
+    def rekey(self, corrs: list[Correlation], *, cov: bool) -> DataFrame:
+        """prepared-series -> correlation-keyed frame via ONE broadcast
+        mapping join (a union per correlation would grow the plan
+        linearly with the correlation count)."""
+        mapping = self.spark.createDataFrame(
+            [(self.leg_sid(c, cov=cov), c.id) for c in corrs],
+            "sid string, series_id string",
+        )
+        return (
+            self.prepared.withColumnRenamed("series_id", "sid")
+            .join(F.broadcast(mapping), on="sid")
+            .select("series_id", "ds", "y")
+        )
+
+    def horizon(self, corrs: list[Correlation], *, cov: bool) -> Column:
+        """Per-correlation horizons as one CASE over the rekeyed ids."""
+        expr = None
+        for c in corrs:
+            clause = (F.col("series_id") == c.id, F.lit(int(self.units(c, cov=cov))))
+            expr = F.when(*clause) if expr is None else expr.when(*clause)
+        return expr.otherwise(F.col("n_buckets"))
+
+    def caps(self, corr: Correlation, *, cov: bool) -> tuple[float, float]:
+        """A4 floor/cap of one leg from the stats pass (app.py:354-364)."""
+        opts = corr.forecast_options
+        cap = (opts.from_cap if cov else opts.to_cap) if opts else None
+        user_floor = cap.floor if cap else 0.0
+        user_ceiling = cap.ceiling if cap else None
+        s = self.leg_stats(corr, cov=cov)
+        n = s["n"]
+        std = 0.0
+        if n > 1:
+            var = (s["sumsq_y"] - s["sum_y"] * s["sum_y"] / float(n)) / (n - 1.0)
+            std = math.sqrt(max(var, 0.0))
+        floor = s["min_y"] if user_floor is None else min(user_floor, s["min_y"])
+        default_ceiling = s["max_y"] + 3.0 * std
+        # falsy check matches the reference's `ceiling or (max + 3*std)`
+        # (app.py:359-364): an explicit 0 ceiling auto-derives the cap
+        ceiling = (
+            max(default_ceiling, s["max_y"])
+            if not user_ceiling
+            else max(user_ceiling, s["max_y"])
+        )
+        return float(floor), float(ceiling)
+
+    def clamp(self, corrs: list[Correlation], col: Column, *, cov: bool) -> Column:
+        """``col`` clamped into each correlation's leg envelope, one CASE."""
+        expr = None
+        for c in corrs:
+            lo, hi = self.caps(c, cov=cov)
+            clamped = F.least(F.greatest(col, F.lit(lo)), F.lit(hi))
+            cond = F.col("series_id") == c.id
+            expr = F.when(cond, clamped) if expr is None else expr.when(cond, clamped)
+        return expr.otherwise(col)
+
+    def checkpoint(self, df: DataFrame) -> DataFrame:
+        """Eager localCheckpoint that the request releases when it ends."""
+        df = df.localCheckpoint(eager=True)
+        self.checkpoints.append(df)
+        return df
+
+
+@contextmanager
+def _request_plan(
+    spark: SparkSession, request: AnalyzeRequest, *, covariate: bool = True
+) -> Iterator[_RequestPlan]:
+    """Prepare the request's legs, read their stats, and release every
+    cache and checkpoint of the request on exit, failed or not.
+
+    A leg with no non-null observation (unknown dataset, or an index
+    path that matches nothing) fails here, before any forecast job.
+    """
+    plan = _RequestPlan(spark, request, covariate=covariate)
     raw = documents_df(spark, request.documents)
     raw.cache()
-    output: dict[str, Any] = {"correlations": {}}
-    prepared = None
     try:
-        # ---- stage 1: ONE plan for every distinct prepared series -------
-        # distinct (dataset, index, grain, agg) legs share a series id, so
-        # e.g. three correlations against the same target prepare it once.
-        leg_sids: dict[tuple, str] = {}
-        for corr in request.correlations:
-            g = normalize_grain(corr.grain)
-            a = normalize_aggregation(corr.aggregation)
-            for ds_name, idx in (
-                (corr.from_data, corr.from_index),
-                (corr.to_data, corr.to_index),
-            ):
-                key = (ds_name, idx, g, a)
-                leg_sids.setdefault(key, f"{ds_name}.{idx}|{g}|{a}")
         prepared = None
-        for (ds_name, idx, g, a), sid in leg_sids.items():
+        for (ds_name, idx, g, a), sid in plan.leg_sids.items():
             series = extract_series(
                 raw, dataset=ds_name, index_path=idx, series_id=sid
             )
@@ -176,46 +245,194 @@ def analyze(
             prepared = (
                 bucketed if prepared is None else prepared.unionByName(bucketed)
             )
-        prepared = _size_gated(prepared, _request_rows(request.documents))
-
-        # ---- stage 2: one stats action over all series -------------------
-        stats = {
+        plan.prepared = _size_gated(prepared, _request_rows(request.documents))
+        plan.stats = {
             r["series_id"]: r
-            for r in _profiled(
-                prepared.groupBy("series_id")
-                .agg(
-                    F.min("ds").alias("min_ds"),
-                    F.max("ds").alias("max_ds"),
-                    F.count("y").alias("n"),
-                )
-                .collect,
-                "prepare+stats",
-            )()
+            for r in plan.prepared.groupBy("series_id")
+            .agg(
+                F.min("ds").alias("min_ds"),
+                F.max("ds").alias("max_ds"),
+                F.count("y").alias("n"),
+                F.min("y").alias("min_y"),
+                F.max("y").alias("max_y"),
+                F.sum("y").alias("sum_y"),
+                F.sum(F.col("y") * F.col("y")).alias("sumsq_y"),
+            )
+            .collect()
         }
-        for (ds_name, idx, g, a), sid in leg_sids.items():
-            if sid not in stats:
+        for (ds_name, idx, _, _), sid in plan.leg_sids.items():
+            if sid not in plan.stats or plan.stats[sid]["n"] == 0:
                 raise ValueError(
                     f"dataset {ds_name!r} / index {idx!r} produced no observations"
                 )
+        yield plan
+    finally:
+        for df in plan.checkpoints:
+            # a localCheckpoint's blocks belong to the RDD under its
+            # LogicalRDD plan; nothing else unpersists them
+            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        if plan.prepared is not None:
+            plan.prepared.unpersist()
+        raw.unpersist()
 
-        def leg_sid(corr: Correlation, *, cov: bool) -> str:
-            ds_name, idx = (
-                (corr.from_data, corr.from_index)
-                if cov
-                else (corr.to_data, corr.to_index)
+
+def _fold(
+    plan: _RequestPlan,
+    corrs: list[Correlation],
+    grain: str,
+    scale: float | None,
+    *,
+    saturating: bool,
+) -> list:
+    """ONE forecast plan for the correlations sharing (grain, changepoint
+    scale); rows keyed by correlation id, sorted by (id, ds).
+
+    Both legs are rekeyed to the correlation id, so each correlation
+    keeps its own horizons (the reference forecasts each covariate with
+    its correlation's horizon, app.py:122-134) and one call regresses
+    every pairing. A provided scale selects the piecewise changepoint
+    trend (README DIVERGENCES #9). The covariate's actuals override its
+    predictions before the target consumes them (app.py:144-151,
+    478-483). ``saturating`` clamps each leg into its own A4 envelope
+    (W5). Without a covariate leg (``/saturating-growth/single``) the
+    target forecasts alone with the linear trend.
+    """
+
+    def clamp(col: Column, *, cov: bool) -> Column:
+        return plan.clamp(corrs, col, cov=cov) if saturating else col
+
+    targets = plan.rekey(corrs, cov=False)
+    tgt_horizon = plan.horizon(corrs, cov=False)
+    if not plan.covariate:
+        pred = forecast_linear_seasonal(targets, grain=grain, horizon=tgt_horizon)
+    else:
+        cov_hist = plan.rekey(corrs, cov=True)
+        cov_horizon = plan.horizon(corrs, cov=True)
+        if scale is None:
+            cov_yhat = forecast_linear_seasonal(cov_hist, grain=grain, horizon=cov_horizon)
+        else:
+            cov_yhat = forecast_changepoint(
+                cov_hist,
+                grain=grain,
+                horizon=cov_horizon,
+                n_changepoints=N_CHANGEPOINTS,
+                changepoint_prior_scale=scale,
+                include_bounds=False,
             )
-            return leg_sids[
-                (
-                    ds_name,
-                    idx,
-                    normalize_grain(corr.grain),
-                    normalize_aggregation(corr.aggregation),
-                )
-            ]
+        cov_full = coalesce_actuals(
+            cov_yhat.select("series_id", "ds", clamp(F.col("yhat"), cov=True).alias("cov")),
+            cov_hist.select("series_id", "ds", "y"),
+            on=("series_id", "ds"),
+            pred_col="cov",
+            out_col="cov",
+        )
+        # the covariate grid is referenced twice in the target plan;
+        # truncating its (forecast sub-plan) lineage ~halves the cost.
+        # The broadcast hint fixes the target joins' plan: the checkpoint
+        # has no usable size estimate, so they would plan as sort-merge
+        # joins that AQE turns into broadcasts at run time, and whether
+        # the target side was shuffled by then (which reorders the rows
+        # the target's sums add up, moving their last bits) depends on
+        # which stage finished first.
+        cov_full = F.broadcast(plan.checkpoint(cov_full))
+        if scale is None:
+            pred = forecast_with_covariate(
+                targets, cov_full, grain=grain, horizon=tgt_horizon
+            )
+        else:
+            pred = forecast_covariate_changepoint(
+                targets,
+                cov_full,
+                grain=grain,
+                horizon=tgt_horizon,
+                n_changepoints=N_CHANGEPOINTS,
+                changepoint_prior_scale=scale,
+            )
+    if saturating:
+        # the reference's saturating response carries Prophet's interval
+        # columns clamped into the same envelope (app.py:336-352)
+        pred = pred.select(
+            "series_id",
+            "ds",
+            *(
+                clamp(F.col(c), cov=False).alias(c)
+                for c in ("yhat", "yhat_lower", "yhat_upper")
+            ),
+        )
+    return pred.orderBy("series_id", "ds").collect()
 
-        # ---- stage 3: ONE fused ACF+PACF job over all series -------------
-        # both derive from the same lag-product sums; acf_pacf runs the
-        # window+agg once and emits both columns in a single action
+
+def _fold_groups(
+    corrs, scale: Callable[[Correlation], float | None]
+) -> dict[tuple[str, float | None], list[Correlation]]:
+    """Correlations by fold key: (grain, changepoint scale or None)."""
+    groups: dict[tuple[str, float | None], list[Correlation]] = {}
+    for c in corrs:
+        groups.setdefault((normalize_grain(c.grain), scale(c)), []).append(c)
+    return groups
+
+
+def _fan_out(calls: dict[Any, Callable[[], Any]]) -> dict[Any, Any]:
+    """Run independent job chains from separate driver threads.
+
+    The chains are Spark jobs over the cached ``prepared`` frame (the
+    stats action materialized it), so the scheduler runs them
+    simultaneously: the wall clock is the longest chain (the covariate
+    forecast), not the sum, and plan construction (py4j-bound)
+    overlaps with the other chains' execution.
+    """
+    with ThreadPoolExecutor(max_workers=max(len(calls), 1)) as pool:
+        futures = {key: pool.submit(call) for key, call in calls.items()}
+        return {key: f.result() for key, f in futures.items()}
+
+
+def _no_bounds(corr: Correlation) -> bool:
+    # Prophet's uncertainty_samples=0 omits interval columns; the
+    # reference forwards the knob (app.py:124-131)
+    opts = corr.forecast_options
+    return opts is not None and opts.uncertainty_samples == 0
+
+
+def _same_label(ds):
+    return ds
+
+
+def _predictions(
+    rows, corr: Correlation, max_hist, *, no_bounds: bool, label=_same_label
+) -> dict:
+    """historical/future forecast records of one correlation (W7 + P3)."""
+    dropped = {"series_id", "coef"} | (
+        {"yhat_lower", "yhat_upper"} if no_bounds else set()
+    )
+
+    def record(row) -> dict:
+        return {
+            _RENAMES.get(k, k): label(v) if k == "ds" else v
+            for k, v in row.asDict().items()
+            if k not in dropped
+        }
+
+    rows_c = [r for r in rows if r["series_id"] == corr.id]
+    return {
+        "historicalForecasts": [record(r) for r in rows_c if r["ds"] <= max_hist],
+        "futureForecasts": [record(r) for r in rows_c if r["ds"] > max_hist],
+    }
+
+
+def analyze(
+    spark: SparkSession, request: AnalyzeRequest, *, lags: int | None = None
+) -> dict:
+    """``/analyze`` semantics: covariate-driven forecast per correlation.
+
+    Returns {"correlations": {id: {diagnostics, autocorrelations,
+    partialAutocorrelations, regressorCoefficients, predictions}}} —
+    the reference's response shape (app.py:211-248, responses.py).
+    """
+    output: dict[str, Any] = {"correlations": {}}
+    with _request_plan(spark, request) as plan:
+        stats = plan.stats
+        # ONE fused ACF+PACF job over all series: both derive from the
+        # same lag-product sums, one window+agg emits both columns
         if lags is not None:
             k_by_sid = {sid: lags for sid in stats}
         else:
@@ -224,158 +441,22 @@ def analyze(
 
         def run_diagnostics() -> list:
             return acf_pacf(
-                prepared, lags=k_max, series_cols=("series_id",)
+                plan.prepared, lags=k_max, series_cols=("series_id",)
             ).collect()
 
-        # ---- stage 4+5: all forecasts in one plan per grain --------------
-        # both legs are rekeyed to the correlation id (shared PREP is one
-        # plan, but each correlation keeps its own horizons — the
-        # reference forecasts each correlation's covariate with that
-        # correlation's horizon, app.py:122-134); one
-        # forecast_with_covariate call per grain regresses every pairing
-        def case_over_ids(values: dict[str, int]):
-            expr = None
-            for cid, h in values.items():
-                clause = (F.col("series_id") == cid, F.lit(int(h)))
-                expr = F.when(*clause) if expr is None else expr.when(*clause)
-            return expr.otherwise(F.col("n_buckets"))
-
-        prophet_corrs = [c for c in request.correlations if c.type == "prophet"]
-        granger_corrs = [c for c in request.correlations if c.type == "granger"]
-
-        def rekey(corrs, *, cov: bool) -> DataFrame:
-            """prepared-series -> correlation-keyed frame via ONE broadcast
-            mapping join (a union per correlation would grow the plan
-            linearly with the correlation count)."""
-            mapping = spark.createDataFrame(
-                [(leg_sid(c, cov=cov), c.id) for c in corrs],
-                "sid string, series_id string",
-            )
-            return (
-                prepared.withColumnRenamed("series_id", "sid")
-                .join(F.broadcast(mapping), on="sid")
-                .select("series_id", "ds", "y")
-            )
-
-        # fold key: (grain, changepoint scale or None). Correlations that
-        # provide ChangePointPriorScale get the piecewise changepoint
-        # trend (README DIVERGENCES #9); the rest share the plain linear
-        # plan. Distinct scales fold into distinct plans.
-        fold_keys = {
-            (
-                normalize_grain(c.grain),
-                c.changepoint_prior_scale
-                if c.changepoint_prior_scale_provided
-                else None,
-            )
-            for c in prophet_corrs
-        }
-
-        def run_fold(g, cps) -> list:
-            corrs_g = [
-                c
-                for c in prophet_corrs
-                if normalize_grain(c.grain) == g
-                and (
-                    c.changepoint_prior_scale
-                    if c.changepoint_prior_scale_provided
-                    else None
-                )
-                == cps
-            ]
-            cov_hist = rekey(corrs_g, cov=True)
-            targets = rekey(corrs_g, cov=False)
-            cov_horizons = {
-                c.id: c.prediction_horizon or stats[leg_sid(c, cov=True)]["n"]
-                for c in corrs_g
-            }
-            tgt_horizons = {
-                c.id: c.prediction_horizon or stats[leg_sid(c, cov=False)]["n"]
-                for c in corrs_g
-            }
-            if cps is None:
-                cov_pred = forecast_linear_seasonal(
-                    cov_hist, grain=g, horizon=case_over_ids(cov_horizons)
-                ).select("series_id", "ds", F.col("yhat").alias("cov"))
-            else:
-                cov_pred = forecast_changepoint(
-                    cov_hist,
-                    grain=g,
-                    horizon=case_over_ids(cov_horizons),
-                    n_changepoints=N_CHANGEPOINTS,
-                    changepoint_prior_scale=cps,
-                    include_bounds=False,
-                ).select("series_id", "ds", F.col("yhat").alias("cov"))
-            cov_full = coalesce_actuals(
-                cov_pred,
-                cov_hist.select("series_id", "ds", "y"),
-                on=("series_id", "ds"),
-                pred_col="cov",
-                out_col="cov",
-            )
-            if cps is None:
-                pred = forecast_with_covariate(
-                    targets,
-                    cov_full,
-                    grain=g,
-                    horizon=case_over_ids(tgt_horizons),
-                    # the covariate grid is referenced twice in the plan;
-                    # truncating its (forecast sub-plan) lineage ~halves cost
-                    materialize_covariate=True,
-                    # targets derive from the cached `prepared` frame via a
-                    # broadcast mapping join — an extra checkpoint job would
-                    # cost more than the recompute it saves
-                    materialize_history=False,
-                )
-            else:
-                pred = forecast_covariate_changepoint(
-                    targets,
-                    cov_full,
-                    grain=g,
-                    horizon=case_over_ids(tgt_horizons),
-                    n_changepoints=N_CHANGEPOINTS,
-                    changepoint_prior_scale=cps,
-                    materialize_covariate=True,
-                    materialize_history=False,
-                )
-            return pred.orderBy("series_id", "ds").collect()
-
-        # ---- granger correlations: aligned pairs, ONE grouped-UDF plan ---
+        # granger correlations: aligned pairs, ONE grouped-UDF plan.
         # type="granger" is declared in the reference enum (app.py:33) but
         # never implemented there; semantics follow the notebook prototype
         # (Untitled.ipynb cell 12): detrended ssr F-tests per lag.
+        granger_corrs = [c for c in request.correlations if c.type == "granger"]
+
         def run_granger() -> list:
-            tgt = rekey(granger_corrs, cov=False)
-            cov_leg = rekey(granger_corrs, cov=True).withColumnRenamed("y", "x")
+            tgt = plan.rekey(granger_corrs, cov=False)
+            cov_leg = plan.rekey(granger_corrs, cov=True).withColumnRenamed("y", "x")
             pair = tgt.join(cov_leg, on=["series_id", "ds"], how="inner")
             return granger_causality(
                 pair, maxlag=14, series_cols=("series_id",)
             ).collect()
-
-        # ---- assembly (driver-side, no further actions) ------------------
-        def lags_for(rows, sid, col, kk):
-            # constant series => zero variance => NULL acf; surface NaN
-            # like statsmodels rather than crashing on float(None)
-            return {
-                "lags": {
-                    int(r["lag"]): (
-                        float(r[col]) if r[col] is not None else float("nan")
-                    )
-                    for r in sorted(rows, key=lambda r: r["lag"])
-                    if r["series_id"] == sid and r["lag"] <= kk
-                }
-            }
-
-        def to_record(row, *, no_bounds=False):
-            d = row.asDict()
-            d.pop("series_id", None)
-            d.pop("coef", None)
-            if no_bounds:
-                # Prophet's uncertainty_samples=0 omits interval columns;
-                # the reference forwards the knob (app.py:124-131)
-                d.pop("yhat_lower", None)
-                d.pop("yhat_upper", None)
-            return {_RENAMES.get(k, k): v for k, v in d.items()}
 
         # univariateStatistics correlations need quantile describes — one
         # extra plan only when such correlations exist
@@ -385,59 +466,64 @@ def analyze(
 
         def run_describe() -> dict:
             wanted = {
-                leg_sid(c, cov=cov) for c in stats_corrs for cov in (True, False)
+                plan.leg_sid(c, cov=cov) for c in stats_corrs for cov in (True, False)
             }
             return {
                 r["series_id"]: r
                 for r in describe(
-                    prepared.filter(F.col("series_id").isin(list(wanted))),
+                    plan.prepared.filter(F.col("series_id").isin(list(wanted))),
                     series_cols=("series_id",),
                 ).collect()
             }
 
-        # ---- concurrent fan-out: the stage chains above are independent
-        # Spark jobs over the (already materialized by the stats action)
-        # cached `prepared` frame, so they submit from separate driver
-        # threads and the scheduler runs them simultaneously — the wall
-        # clock is the longest chain (the covariate forecast), not the
-        # sum. Plan construction (py4j-bound) overlaps with execution of
-        # the other chains for free.
-        with ThreadPoolExecutor(
-            max_workers=3 + max(len(fold_keys), 1)
-        ) as pool:
-            f_diag = pool.submit(_profiled(run_diagnostics, "diagnostics"))
-            f_folds = [
-                pool.submit(_profiled(run_fold, f"fold:{g}:{cps}"), g, cps)
-                for g, cps in fold_keys
-            ]
-            f_granger = (
-                pool.submit(_profiled(run_granger, "granger"))
-                if granger_corrs
-                else None
-            )
-            f_describe = (
-                pool.submit(_profiled(run_describe, "describe"))
-                if stats_corrs
-                else None
-            )
-            diag_rows = f_diag.result()
-            pred_rows: list = []
-            for f in f_folds:
-                pred_rows.extend(f.result())
-            granger_rows: list = f_granger.result() if f_granger else []
-            describe_by_sid: dict[str, Any] = (
-                f_describe.result() if f_describe else {}
-            )
-        acf_rows = pacf_rows = diag_rows
+        # /analyze reads the scale from the correlation's top-level
+        # ChangePointPriorScale, and only when the request provides it
+        folds = _fold_groups(
+            [c for c in request.correlations if c.type == "prophet"],
+            lambda c: (
+                c.changepoint_prior_scale if c.changepoint_prior_scale_provided else None
+            ),
+        )
+        calls: dict[Any, Callable[[], Any]] = {"diagnostics": run_diagnostics}
+        for key, corrs in folds.items():
+            calls[key] = partial(_fold, plan, corrs, *key, saturating=False)
+        if granger_corrs:
+            calls["granger"] = run_granger
+        if stats_corrs:
+            calls["describe"] = run_describe
+        done = _fan_out(calls)
+        diag_rows = done["diagnostics"]
+        pred_rows = [r for key in folds for r in done[key]]
+        granger_rows = done.get("granger", [])
+        describe_by_sid = done.get("describe", {})
+
+        # ---- assembly (driver-side, no further actions) ------------------
+        def lags_for(sid, col, kk):
+            # constant series => zero variance => NULL acf; surface NaN
+            # like statsmodels rather than crashing on float(None)
+            return {
+                "lags": {
+                    int(r["lag"]): (
+                        float(r[col]) if r[col] is not None else float("nan")
+                    )
+                    for r in sorted(diag_rows, key=lambda r: r["lag"])
+                    if r["series_id"] == sid and r["lag"] <= kk
+                }
+            }
+
+        def describe_dict(sid: str) -> dict:
+            r = describe_by_sid.get(sid)
+            if r is None:
+                return {}
+            return {
+                key: r[key]
+                for key in ("n", "mean", "std", "min", "q25", "median", "q75", "max")
+            }
 
         for corr in request.correlations:
-            cov_sid = leg_sid(corr, cov=True)
-            tgt_sid = leg_sid(corr, cov=False)
+            cov_sid = plan.leg_sid(corr, cov=True)
+            tgt_sid = plan.leg_sid(corr, cov=False)
             cov_stats, tgt_stats = stats[cov_sid], stats[tgt_sid]
-            cov_horizon = corr.prediction_horizon or cov_stats["n"]
-            tgt_horizon = corr.prediction_horizon or tgt_stats["n"]
-            k = k_by_sid[tgt_sid]
-            k_cov = k_by_sid[cov_sid]
             entry: dict[str, Any] = {
                 # reference seeds each correlation with its type (app.py:100)
                 "type": corr.type,
@@ -448,50 +534,37 @@ def analyze(
                         "index": corr.from_index,
                         "minDate": cov_stats["min_ds"],
                         "maxDate": cov_stats["max_ds"],
-                        "unitsForecasted": cov_horizon,
+                        "unitsForecasted": plan.units(corr, cov=True),
                     },
                     "to": {
                         "data": corr.to_data,
                         "index": corr.to_index,
                         "minDate": tgt_stats["min_ds"],
                         "maxDate": tgt_stats["max_ds"],
-                        "unitsForecasted": tgt_horizon,
+                        "unitsForecasted": plan.units(corr, cov=False),
                     },
                 },
                 "autocorrelations": {
                     "description": ACF_DESCRIPTION,
-                    "from": lags_for(acf_rows, cov_sid, "acf", k_cov),
-                    "to": lags_for(acf_rows, tgt_sid, "acf", k),
+                    "from": lags_for(cov_sid, "acf", k_by_sid[cov_sid]),
+                    "to": lags_for(tgt_sid, "acf", k_by_sid[tgt_sid]),
                 },
                 "partialAutocorrelations": {
                     "description": PACF_DESCRIPTION,
-                    "from": lags_for(pacf_rows, cov_sid, "pacf", k_cov),
-                    "to": lags_for(pacf_rows, tgt_sid, "pacf", k),
+                    "from": lags_for(cov_sid, "pacf", k_by_sid[cov_sid]),
+                    "to": lags_for(tgt_sid, "pacf", k_by_sid[tgt_sid]),
                 },
             }
             if corr.type == "prophet":
-                rows_c = [r for r in pred_rows if r["series_id"] == corr.id]
-                coef = rows_c[0]["coef"] if rows_c else None
-                max_hist = tgt_stats["max_ds"]
-                no_bounds = (
-                    corr.forecast_options is not None
-                    and corr.forecast_options.uncertainty_samples == 0
+                coef = next(
+                    (r["coef"] for r in pred_rows if r["series_id"] == corr.id), None
                 )
                 entry["regressorCoefficients"] = [
                     {"regressor": f"{corr.from_data}.{corr.from_index}", "coef": coef}
                 ]
-                entry["predictions"] = {
-                    "historicalForecasts": [
-                        to_record(r, no_bounds=no_bounds)
-                        for r in rows_c
-                        if r["ds"] <= max_hist
-                    ],
-                    "futureForecasts": [
-                        to_record(r, no_bounds=no_bounds)
-                        for r in rows_c
-                        if r["ds"] > max_hist
-                    ],
-                }
+                entry["predictions"] = _predictions(
+                    pred_rows, corr, tgt_stats["max_ds"], no_bounds=_no_bounds(corr)
+                )
             elif corr.type == "granger":
                 rows_c = [r for r in granger_rows if r["series_id"] == corr.id]
                 entry["grangerCausality"] = [
@@ -506,326 +579,83 @@ def analyze(
                     for r in sorted(rows_c, key=lambda r: r["lag"])
                 ]
             else:  # univariateStatistics
-                def describe_dict(sid: str) -> dict:
-                    r = describe_by_sid.get(sid)
-                    if r is None:
-                        return {}
-                    return {
-                        key: r[key]
-                        for key in ("n", "mean", "std", "min", "q25", "median", "q75", "max")
-                    }
-
                 entry["univariateStatistics"] = {
                     "from": describe_dict(cov_sid),
                     "to": describe_dict(tgt_sid),
                 }
             output["correlations"][corr.id] = entry
-    finally:
-        if prepared is not None:
-            prepared.unpersist()
-        raw.unpersist()
     return output
 
 
-def saturating_growth(spark: SparkSession, request: AnalyzeRequest) -> dict:
-    """``/saturating-growth`` semantics (app.py:490-559), intent version.
+def _calendar_label(ds):
+    """Date label of a calendar-grain bucket (grains.bucket_expr)."""
+    return ds.date() if isinstance(ds, _dt.datetime) else ds
 
-    Covariate and target both forecast with floor/cap clamping (W5);
-    the covariate's actuals override its predictions before the target
-    leg consumes it (app.py:478-483). Folded like ``analyze``: shared
-    series prep, ONE stats action (which also carries the min/max/sum
-    scalars the A4 caps need — floor/cap per correlation become plain
-    CASE literals), one forecast plan per grain, one collect.
-    """
-    import math
 
-    from temporal_retriever_spark.aggregate import normalize_aggregation
-    from temporal_retriever_spark.grains import normalize_grain
+def _saturating(spark: SparkSession, request: AnalyzeRequest, *, single: bool) -> dict:
+    """``/saturating-growth`` and ``/saturating-growth/single``
+    (app.py:490-609): every leg clamped into its own A4 envelope, the
+    response wrapped with the growth mode and the target's observed
+    date bounds (app.py:594-607)."""
 
-    raw = documents_df(spark, request.documents)
-    raw.cache()
-    output: dict[str, Any] = {"correlations": {}}
-    prepared = None
-    try:
-        leg_sids: dict[tuple, str] = {}
-        for corr in request.correlations:
-            g = normalize_grain(corr.grain)
-            a = normalize_aggregation(corr.aggregation)
-            for ds_name, idx in (
-                (corr.from_data, corr.from_index),
-                (corr.to_data, corr.to_index),
-            ):
-                leg_sids.setdefault((ds_name, idx, g, a), f"{ds_name}.{idx}|{g}|{a}")
-        prepared = None
-        for (ds_name, idx, g, a), sid in leg_sids.items():
-            series = extract_series(raw, dataset=ds_name, index_path=idx, series_id=sid)
-            bucketed = bucket_aggregate(
-                series.filter(F.col("ds").isNotNull()),
-                grain=g,
-                agg=a,
-                series_cols=("series_id",),
-            )
-            prepared = bucketed if prepared is None else prepared.unionByName(bucketed)
-        prepared = _size_gated(prepared, _request_rows(request.documents))
-
-        stats = {
-            r["series_id"]: r
-            for r in prepared.groupBy("series_id")
-            .agg(
-                F.min("ds").alias("min_ds"),
-                F.max("ds").alias("max_ds"),
-                F.count("y").alias("n"),
-                F.min("y").alias("min_y"),
-                F.max("y").alias("max_y"),
-                F.sum("y").alias("sum_y"),
-                F.sum(F.col("y") * F.col("y")).alias("sumsq_y"),
-            )
-            .collect()
-        }
-        for (ds_name, idx, g, a), sid in leg_sids.items():
-            if sid not in stats:
-                raise ValueError(
-                    f"dataset {ds_name!r} / index {idx!r} produced no observations"
-                )
-
-        def leg_sid(corr: Correlation, *, cov: bool) -> str:
-            ds_name, idx = (
-                (corr.from_data, corr.from_index)
-                if cov
-                else (corr.to_data, corr.to_index)
-            )
-            return leg_sids[
-                (ds_name, idx, normalize_grain(corr.grain),
-                 normalize_aggregation(corr.aggregation))
-            ]
-
-        def caps_for(sid: str, user_floor, user_ceiling) -> tuple[float, float]:
-            """A4 scalars from the stats pass (app.py:354-364)."""
-            s = stats[sid]
-            n = s["n"]
-            std = 0.0
-            if n > 1:
-                var = (s["sumsq_y"] - s["sum_y"] * s["sum_y"] / float(n)) / (n - 1.0)
-                std = math.sqrt(max(var, 0.0))
-            floor = s["min_y"] if user_floor is None else min(user_floor, s["min_y"])
-            default_ceiling = s["max_y"] + 3.0 * std
-            # falsy check matches the reference's `ceiling or (max + 3*std)`
-            # (app.py:359-364): an explicit 0 ceiling auto-derives the cap
-            ceiling = (
-                max(default_ceiling, s["max_y"])
-                if not user_ceiling
-                else max(user_ceiling, s["max_y"])
-            )
-            return float(floor), float(ceiling)
-
-        def clamp_case(values: dict[str, tuple[float, float]], col: Column) -> Column:
-            expr = None
-            for cid, (lo, hi) in values.items():
-                clamped = F.least(F.greatest(col, F.lit(lo)), F.lit(hi))
-                cond = F.col("series_id") == cid
-                expr = F.when(cond, clamped) if expr is None else expr.when(cond, clamped)
-            return expr.otherwise(col)
-
-        def case_over_ids(values: dict[str, int]) -> Column:
-            expr = None
-            for cid, h in values.items():
-                clause = (F.col("series_id") == cid, F.lit(int(h)))
-                expr = F.when(*clause) if expr is None else expr.when(*clause)
-            return expr.otherwise(F.col("n_buckets"))
-
-        def rekey(corrs, *, cov: bool) -> DataFrame:
-            mapping = spark.createDataFrame(
-                [(leg_sid(c, cov=cov), c.id) for c in corrs],
-                "sid string, series_id string",
-            )
-            return (
-                prepared.withColumnRenamed("series_id", "sid")
-                .join(F.broadcast(mapping), on="sid")
-                .select("series_id", "ds", "y")
-            )
-
-        def corr_cps(c) -> float | None:
-            o = c.forecast_options
-            if o is not None and o.changepoint_prior_scale_provided:
-                return o.changepoint_prior_scale
+    def scale(c: Correlation) -> float | None:
+        # the saturating route reads the scale from
+        # ForecastingOptions.toIndex.changepointPriorScale; /single always
+        # fits the linear trend
+        o = c.forecast_options
+        if single or o is None or not o.changepoint_prior_scale_provided:
             return None
+        return o.changepoint_prior_scale
 
-        fold_keys = {
-            (normalize_grain(c.grain), corr_cps(c)) for c in request.correlations
-        }
-
-        def run_fold(g, cps) -> list:
-            corrs_g = [
-                c
-                for c in request.correlations
-                if normalize_grain(c.grain) == g and corr_cps(c) == cps
-            ]
-            cov_hist = rekey(corrs_g, cov=True)
-            targets = rekey(corrs_g, cov=False)
-            cov_caps: dict[str, tuple[float, float]] = {}
-            tgt_caps: dict[str, tuple[float, float]] = {}
-            for corr in corrs_g:
-                opts = corr.forecast_options
-                from_cap = opts.from_cap if opts else None
-                to_cap = opts.to_cap if opts else None
-                cov_caps[corr.id] = caps_for(
-                    leg_sid(corr, cov=True),
-                    from_cap.floor if from_cap else 0.0,
-                    from_cap.ceiling if from_cap else None,
-                )
-                tgt_caps[corr.id] = caps_for(
-                    leg_sid(corr, cov=False),
-                    to_cap.floor if to_cap else 0.0,
-                    to_cap.ceiling if to_cap else None,
-                )
-            cov_horizons = {
-                c.id: c.prediction_horizon or stats[leg_sid(c, cov=True)]["n"]
-                for c in corrs_g
+    output: dict[str, Any] = {"correlations": {}}
+    with _request_plan(spark, request, covariate=not single) as plan:
+        folds = _fold_groups(request.correlations, scale)
+        done = _fan_out(
+            {
+                key: partial(_fold, plan, corrs, *key, saturating=True)
+                for key, corrs in folds.items()
             }
-            tgt_horizons = {
-                c.id: c.prediction_horizon or stats[leg_sid(c, cov=False)]["n"]
-                for c in corrs_g
-            }
-            if cps is None:
-                cov_yhat = forecast_linear_seasonal(
-                    cov_hist, grain=g, horizon=case_over_ids(cov_horizons)
-                )
-            else:
-                cov_yhat = forecast_changepoint(
-                    cov_hist,
-                    grain=g,
-                    horizon=case_over_ids(cov_horizons),
-                    n_changepoints=N_CHANGEPOINTS,
-                    changepoint_prior_scale=cps,
-                    include_bounds=False,
-                )
-            cov_pred = cov_yhat.select(
-                "series_id", "ds",
-                clamp_case(cov_caps, F.col("yhat")).alias("cov"),
-            )
-            cov_full = coalesce_actuals(
-                cov_pred,
-                cov_hist.select("series_id", "ds", "y"),
-                on=("series_id", "ds"),
-                pred_col="cov",
-                out_col="cov",
-            )
-            forecaster = (
-                forecast_with_covariate
-                if cps is None
-                else partial(
-                    forecast_covariate_changepoint,
-                    n_changepoints=N_CHANGEPOINTS,
-                    changepoint_prior_scale=cps,
-                )
-            )
-            pred = forecaster(
-                targets,
-                cov_full,
-                grain=g,
-                horizon=case_over_ids(tgt_horizons),
-                materialize_covariate=True,
-                materialize_history=False,
-            ).select(
-                "series_id", "ds",
-                clamp_case(tgt_caps, F.col("yhat")).alias("yhat"),
-                # the reference's saturating response carries Prophet's
-                # interval columns clamped into the same envelope
-                # (app.py:336-352)
-                clamp_case(tgt_caps, F.col("yhat_lower")).alias("yhat_lower"),
-                clamp_case(tgt_caps, F.col("yhat_upper")).alias("yhat_upper"),
-            )
-            return pred.orderBy("series_id", "ds").collect()
-
-        # grain folds are independent job chains over the cached
-        # `prepared` frame (materialized by the stats action) — submit
-        # them concurrently, same as `analyze`
-        pred_rows: list = []
-        with ThreadPoolExecutor(max_workers=max(len(fold_keys), 1)) as pool:
-            for f in [pool.submit(run_fold, g, cps) for g, cps in fold_keys]:
-                pred_rows.extend(f.result())
-
+        )
+        pred_rows = [r for rows in done.values() for r in rows]
         for corr in request.correlations:
-            max_hist = stats[leg_sid(corr, cov=False)]["max_ds"]
-            rows_c = [r for r in pred_rows if r["series_id"] == corr.id]
-            no_bounds = (
-                corr.forecast_options is not None
-                and corr.forecast_options.uncertainty_samples == 0
+            tgt_stats = plan.leg_stats(corr, cov=False)
+            # /single keeps date labels on calendar grains even when the
+            # request mixes in clock grains, which widen the shared
+            # prepared frame's ds to timestamps; it also keeps its bounds
+            # whatever uncertaintySamples says
+            label = (
+                _calendar_label
+                if single and normalize_grain(corr.grain) in ("D", "W", "M")
+                else _same_label
             )
-
-            def to_record(row, *, _drop=no_bounds):
-                d = row.asDict()
-                d.pop("series_id", None)
-                if _drop:
-                    # Prophet uncertainty_samples=0: no interval columns
-                    d.pop("yhat_lower", None)
-                    d.pop("yhat_upper", None)
-                return {_RENAMES.get(k, k): v for k, v in d.items()}
-
-            # response wrapper per app.py:594-607: model/growth/observed
-            # bounds alongside the forecast records
             opts = corr.forecast_options
-            tgt_stats = stats[leg_sid(corr, cov=False)]
             output["correlations"][corr.id] = {
                 "type": {
                     "model": corr.type,
                     "growth": opts.growth if opts is not None else "logistic",
                     "bounds": {
-                        "min": tgt_stats["min_ds"],
-                        "max": tgt_stats["max_ds"],
+                        "min": label(tgt_stats["min_ds"]),
+                        "max": label(tgt_stats["max_ds"]),
                     },
                 },
-                "predictions": {
-                    "historicalForecasts": [
-                        to_record(r) for r in rows_c if r["ds"] <= max_hist
-                    ],
-                    "futureForecasts": [
-                        to_record(r) for r in rows_c if r["ds"] > max_hist
-                    ],
-                },
+                "predictions": _predictions(
+                    pred_rows,
+                    corr,
+                    tgt_stats["max_ds"],
+                    no_bounds=not single and _no_bounds(corr),
+                    label=label,
+                ),
             }
-    finally:
-        if prepared is not None:
-            prepared.unpersist()
-        raw.unpersist()
     return output
 
 
-def saturating_growth_single(
-    spark: SparkSession,
-    documents: dict,
-    *,
-    dataset: str,
-    index: str,
-    grain: str = "D",
-    aggregation: str = "sum",
-    horizon: int | None = None,
-    floor: float | None = 0.0,
-    ceiling: float | None = None,
-) -> dict:
-    """``/saturating-growth/single`` (app.py:562-609): univariate leg only."""
-    raw = documents_df(spark, documents)
-    series = extract_series(raw, dataset=dataset, index_path=index)
-    bucketed = bucket_aggregate(
-        series.filter(F.col("ds").isNotNull()),
-        grain=grain,
-        agg=aggregation,
-        series_cols=("series_id",),
-    )
-    pred = forecast_linear_seasonal(
-        bucketed,
-        grain=grain,
-        horizon=horizon,
-        saturating=True,
-        user_floor=floor,
-        user_ceiling=ceiling,
-    )
-    hist, future = split_forecasts(
-        pred,
-        date_bounds(bucketed, series_cols=("series_id",)),
-        series_cols=("series_id",),
-    )
-    return {
-        "historicalForecasts": _records(_rename_predictions(hist.orderBy("ds"))),
-        "futureForecasts": _records(_rename_predictions(future.orderBy("ds"))),
-    }
+def saturating_growth(spark: SparkSession, request: AnalyzeRequest) -> dict:
+    """``/saturating-growth`` (app.py:490-559), intent version: covariate
+    and target both forecast with floor/cap clamping (W5)."""
+    return _saturating(spark, request, single=False)
+
+
+def saturating_growth_single(spark: SparkSession, request: AnalyzeRequest) -> dict:
+    """``/saturating-growth/single`` (app.py:562-609): the target leg only
+    (toData/toIndex and the toIndex caps), no covariate."""
+    return _saturating(spark, request, single=True)

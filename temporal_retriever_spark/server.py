@@ -31,7 +31,6 @@ from pyspark.sql import SparkSession
 from temporal_retriever_spark.api.models import (
     RequestValidationError,
     parse_analyze_request,
-    parse_correlation,
 )
 from temporal_retriever_spark.pipeline import (
     analyze,
@@ -55,53 +54,6 @@ def _json_default(value: Any):
 
 def _dumps(payload: Any) -> bytes:
     return json.dumps(payload, default=_json_default).encode("utf-8")
-
-
-def _single_response(spark: SparkSession, body: dict) -> dict:
-    """``/saturating-growth/single``: target leg only (app.py:562-609).
-
-    The reference reuses the SaturatingGrowthRequest model and reads
-    just the to-leg (toData/toIndex + toIndex forecasting options);
-    the response wraps each correlation with its growth mode and the
-    observed date bounds (app.py:594-607).
-    """
-    request = parse_analyze_request(body)
-    output: dict[str, Any] = {"correlations": {}}
-    for corr in request.correlations:
-        fopts = corr.forecast_options
-        growth = fopts.growth if fopts is not None else "logistic"
-        floor = fopts.to_cap.floor if fopts is not None else 0.0
-        ceiling = fopts.to_cap.ceiling if fopts is not None else None
-        leg = saturating_growth_single(
-            spark,
-            request.documents,
-            dataset=corr.to_data,
-            index=corr.to_index,
-            grain=corr.grain,
-            aggregation=corr.aggregation,
-            horizon=corr.prediction_horizon,
-            floor=floor,
-            ceiling=ceiling,
-        )
-        hist = leg["historicalForecasts"]
-        # historical rows cover every observed bucket, so their date
-        # span IS the observed bounds (app.py:594-600 via date_bounds)
-        dates = [r["date"] for r in hist]
-        output["correlations"][corr.id] = {
-            "type": {
-                "model": corr.type,
-                "growth": growth,
-                "bounds": {
-                    "min": min(dates) if dates else None,
-                    "max": max(dates) if dates else None,
-                },
-            },
-            "predictions": {
-                "historicalForecasts": hist,
-                "futureForecasts": leg["futureForecasts"],
-            },
-        }
-    return output
 
 
 class _Handler(BaseHTTPRequestHandler):
@@ -155,7 +107,9 @@ class _Handler(BaseHTTPRequestHandler):
             elif self.path == "/saturating-growth":
                 result = saturating_growth(self.spark, parse_analyze_request(body))
             elif self.path == "/saturating-growth/single":
-                result = _single_response(self.spark, body)
+                result = saturating_growth_single(
+                    self.spark, parse_analyze_request(body)
+                )
             else:
                 self._respond(404, {"detail": "Not Found"})
                 return

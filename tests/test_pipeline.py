@@ -176,15 +176,18 @@ def test_uncertainty_samples_validation():
 
 
 def test_saturating_growth_single(spark, example_request):
-    out = saturating_growth_single(
-        spark,
-        example_request.documents,
-        dataset="sales_order",
-        index="data.summary.totalWithTax",
+    leg = Correlation(
+        id="single",
+        from_data="sales_order",
+        from_index="data.summary.totalWithTax",
+        to_data="sales_order",
+        to_index="data.summary.totalWithTax",
         grain="D",
         aggregation="sum",
-        horizon=10,
+        prediction_horizon=10,
     )
+    req = type(example_request)(documents=example_request.documents, correlations=(leg,))
+    out = saturating_growth_single(spark, req)["correlations"]["single"]["predictions"]
     assert len(out["futureForecasts"]) == 10
     assert all(r["prediction"] >= 0 for r in out["futureForecasts"])
 

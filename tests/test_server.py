@@ -243,3 +243,101 @@ def test_analyze_response_conforms_to_typed_models(server):
             {"correlations": {"c": {"type": "prophet", "diagnostics": {
                 "units": "Q", "from": {}, "to": {}}}}}
         )
+
+
+# ---- request lifecycle on in-repo bodies -----------------------------------
+
+ROUTES = ("/analyze", "/saturating-growth", "/saturating-growth/single")
+FORECASTS = (
+    "forecast_linear_seasonal",
+    "forecast_with_covariate",
+    "forecast_changepoint",
+    "forecast_covariate_changepoint",
+)
+
+
+def _small_body(**corr) -> dict:
+    data = [
+        {
+            "date": f"2025-03-{day:02d} 10:00:00",
+            "data": {"summary": {"amount": float(day % 5 + day), "units": day % 3}},
+        }
+        for day in range(1, 22)
+    ]
+    correlation = {
+        "id": "c",
+        "fromData": "orders",
+        "fromIndex": "data.summary.units",
+        "toData": "orders",
+        "toIndex": "data.summary.amount",
+        "unitsToForecast": 3,
+        **corr,
+    }
+    return {
+        "documents": {"orders": {"description": "orders", "data": data}},
+        "analyticsOptions": {"correlations": [correlation]},
+    }
+
+
+def _persisted_rdds(spark) -> set[int]:
+    return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
+
+
+def _new_persisted_rdds(spark, before: set[int]) -> set[int]:
+    # a subset check: the context cleaner may drop an RDD an earlier test
+    # left behind while this request runs
+    return _persisted_rdds(spark) - before
+
+
+@pytest.mark.parametrize("route", ROUTES)
+@pytest.mark.parametrize(
+    "leg",
+    [
+        {"toIndex": "data.summary.nothing"},  # path matches no observation
+        {"toData": "unknown"},  # dataset absent from the documents
+    ],
+    ids=["index-matches-nothing", "unknown-dataset"],
+)
+def test_bad_leg_is_422_before_any_forecast(server, spark, monkeypatch, route, leg):
+    import temporal_retriever_spark.pipeline as P
+
+    calls = []
+    for name in FORECASTS:
+        monkeypatch.setattr(P, name, lambda *a, _n=name, **k: calls.append(_n))
+    before = _persisted_rdds(spark)
+    status, body = _post(server, route, _small_body(**leg))
+    assert status == 422, body
+    (err,) = body["detail"]
+    assert "produced no observations" in err["msg"]
+    assert err["type"] == "value_error"
+    assert calls == []
+    assert _new_persisted_rdds(spark, before) == set()
+
+
+@pytest.mark.parametrize(
+    "route,failing",
+    [
+        ("/analyze", "forecast_with_covariate"),
+        ("/saturating-growth", "forecast_with_covariate"),
+        ("/saturating-growth/single", "forecast_linear_seasonal"),
+    ],
+)
+def test_request_releases_its_caches(server, spark, monkeypatch, route, failing):
+    """A request adds nothing to the persisted-RDD set: neither a
+    successful one nor one failing in its forecast (past the covariate
+    checkpoint on the covariate routes)."""
+    import temporal_retriever_spark.pipeline as P
+
+    before = _persisted_rdds(spark)
+    status, body = _post(server, route, _small_body())
+    assert status == 200, body
+    assert body["correlations"]["c"]["predictions"]["futureForecasts"]
+    assert _new_persisted_rdds(spark, before) == set()
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("injected forecast failure")
+
+    monkeypatch.setattr(P, failing, boom)
+    status, body = _post(server, route, _small_body())
+    assert status == 500 and "injected forecast failure" in body["detail"]
+    assert _new_persisted_rdds(spark, before) == set()
